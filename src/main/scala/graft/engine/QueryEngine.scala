@@ -1,10 +1,16 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, UnresolvedWith}
+import org.apache.spark.sql.execution.datasources.{FileIndex, LogicalRelation}
 import org.apache.spark.sql.functions.col
-import graft.catalog.ChunkCatalog
+import graft.catalog.{ChunkCatalog, ChunkMeta}
+import graft.plans.ZoneMapFileIndex
 import graft.prune.{ColumnPredicate, PredicateExtraction, TimeRange}
 import graft.schema.MetricSchema
+import scala.jdk.CollectionConverters._
 
 /** The query pipeline of the reference (src/query/mod.rs:158-241), Spark-first:
   *
@@ -12,9 +18,12 @@ import graft.schema.MetricSchema
   *     (default: last 1 hour) + column predicates (engine.rs:368-487, 493-650).
   *  2. METADATA PRUNE — hour-bucket time-index range scan + zone-map filter over the
   *     catalog (s3.rs:1075-1136). This is the layer Spark doesn't give us for free.
-  *  3. REGISTER — the pruned chunk set becomes the `metrics` temp view
-  *     (mergeSchema=true mirrors DataFusion's multi-path schema inference); empty
-  *     store ⇒ empty DataFrame with the default schema (engine.rs:97-101,189-205).
+  *  3. BIND — every `metrics` reference in the query's parsed tree becomes a
+  *     relation over a ZoneMapFileIndex pinned to the pruned chunk set, per query
+  *     (the reference rebuilds its table per query, engine.rs:133-187); the
+  *     schema is the chunks' catalog-held union; empty set ⇒ the default schema,
+  *     0 rows (engine.rs:97-101,189-205). Nothing is written to the session's
+  *     temp-view catalog, so concurrent queries plan without a lock.
   *  4. EXECUTE — spark.sql: Catalyst does analyze/optimize/physical; the vectorized
   *     Parquet reader re-prunes row groups from footer stats (two-tier pruning like
   *     the reference: metadata prune then Parquet prune).
@@ -74,81 +83,39 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
     }
   }
 
-  @volatile private var lastRegisteredPaths: Seq[String] = null
   /** Paths selected by the most recent sql() — observability for tests/telemetry. */
   @volatile var lastPrunedPaths: Seq[String] = Nil
 
-  /** PLANNING lock: every register-view → resolve-plan pair must be atomic.
-    * The engine plans each query against the single shared `metrics` temp view
-    * (the reference's per-engine registration mutex, engine.rs:127-187); without
-    * this lock two concurrent sql() calls with different pruned chunk sets race —
-    * one query's spark.sql() can resolve against the OTHER query's registered
-    * paths and silently return rows from the wrong chunk set. Planning serializes
-    * (cheap, driver-side); EXECUTION of the resolved DataFrames stays fully
-    * concurrent — the analyzed plan captures its own file listing.
-    */
-  private val planLock = new Object
+  private type Key = (String, Seq[String], Boolean)
 
-  /** Plan cache: (query, pruned path set, split-active) → analyzed DataFrame.
-    * Re-running a repeated dashboard query skips Catalyst analysis/optimization —
-    * the dominant cost of a warm pruned query (~100 ms). Size mirrors the
-    * reference's 100-concurrent-queries default (src/query/mod.rs:50-60).
-    * Eviction is by entry count AND by total persisted-result bytes (see
-    * `cachedBytes`): evicted entries are unpersisted.
+  /** Plan cache: (query, pruned path set, split-active) → analyzed DataFrame
+    * plus what it holds (see [[QueryEngine.Entry]]). Re-running a repeated
+    * dashboard query skips Catalyst analysis/optimization — the dominant cost
+    * of a warm pruned query (~100 ms). Size mirrors the reference's
+    * 100-concurrent-queries default (src/query/mod.rs:50-60). Eviction is by
+    * entry count AND by total persisted-result bytes: evicted entries are
+    * unpersisted.
     */
   private val planCache =
-    new java.util.LinkedHashMap[(String, Seq[String], Boolean), DataFrame](128, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Seq[String], Boolean), DataFrame]): Boolean = {
+    new java.util.LinkedHashMap[Key, QueryEngine.Entry](128, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[Key, QueryEngine.Entry]): Boolean = {
         val evict = size() > 100
         if (evict) dropEntry(e.getKey, e.getValue)
         evict
       }
     }
 
-  /** Estimated persisted bytes per planCache entry (0 for plan-only entries). */
-  private val cachedBytes =
-    scala.collection.mutable.HashMap.empty[(String, Seq[String], Boolean), Long]
-
-  /** Keys whose cached entry was swapped to a driver-local LocalRelation. */
-  private val localizedKeys =
-    scala.collection.mutable.HashSet.empty[(String, Seq[String], Boolean)]
-
-  /** The collected rows behind each localized entry (guarded by planCache's
-    * lock) — the zero-row-work serve tier [[sqlRows]] hands straight back.
-    */
-  private val localRowsStore =
-    scala.collection.mutable.HashMap.empty[(String, Seq[String], Boolean),
-      Array[org.apache.spark.sql.Row]]
-
-  /** Keys whose cached entry is a rollup-routed plan (lastServedFromRollup
-    * stays truthful on cache hits).
-    */
-  private val rollupKeys =
-    scala.collection.mutable.HashSet.empty[(String, Seq[String], Boolean)]
-
-  /** Keys whose cached entry is a topK-rewritten plan (lastTopKRouted stays
-    * truthful on cache hits).
-    */
-  private val topKKeys =
-    scala.collection.mutable.HashSet.empty[(String, Seq[String], Boolean)]
-
-  private def dropEntry(key: (String, Seq[String], Boolean), df: DataFrame): Unit = {
+  private def dropEntry(key: Key, e: QueryEngine.Entry): Unit = {
     // MATERIALIZED entries (persisted result blocks or a driver-local
     // LocalRelation) demote to the L2 disk tier instead of vanishing; the
     // demote task unpersists after the file is written. Plan-only entries
     // (including rollup/top-k routed plans, which are never persisted) have
     // nothing materialized worth writing — recomputing the plan is cheap.
-    val materialized = cachedBytes.contains(key) || localizedKeys(key)
-    if (!(l2Enabled && materialized && demoteToL2(key, df))) {
-      try df.unpersist(blocking = false)
+    val materialized = e.persistedBytes.isDefined || e.localized
+    if (!(l2Enabled && materialized && demoteToL2(key, e.df))) {
+      try e.df.unpersist(blocking = false)
       catch { case scala.util.control.NonFatal(_) => () }
     }
-    cachedBytes.remove(key)
-    localizedKeys.remove(key)
-    localRowsStore.remove(key)
-    rollupKeys.remove(key)
-    topKKeys.remove(key)
   }
 
   // ---------------------------------------------------------------------------
@@ -182,11 +149,11 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
 
   /** key → (parquet dir, bytes on disk); access-ordered for LRU eviction. */
   private val l2Entries =
-    new java.util.LinkedHashMap[(String, Seq[String], Boolean), (String, Long)](32, 0.75f, true)
+    new java.util.LinkedHashMap[Key, (String, Long)](32, 0.75f, true)
 
   /** Keys with a demote write in flight (skip duplicate demotes). */
   private val l2Pending =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, Seq[String], Boolean)]()
+    java.util.concurrent.ConcurrentHashMap.newKeySet[Key]()
 
   /** Single demote worker: L2 writes are tiny (results are ≤
     * `maxCachedResultBytes` by construction) and strictly background —
@@ -197,7 +164,7 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
   })
 
   /** Enqueue a demote; returns true iff the task now owns the unpersist. */
-  private def demoteToL2(key: (String, Seq[String], Boolean), df: DataFrame): Boolean = {
+  private def demoteToL2(key: Key, df: DataFrame): Boolean = {
     val already = l2Entries.synchronized(l2Entries.containsKey(key))
     if (already || !l2Pending.add(key)) return false // file already valid / in flight
     l2Demoter.submit(new Runnable {
@@ -269,7 +236,7 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
     * the entry and falls through to a plain recompute — the tier can serve
     * wrong-shaped bytes to nobody.
     */
-  private def promoteFromL2(key: (String, Seq[String], Boolean)): Option[DataFrame] = {
+  private def promoteFromL2(key: Key): Option[DataFrame] = {
     if (!l2Enabled) return None
     val ent = l2Entries.synchronized(l2Entries.get(key)) // touches LRU order
     if (ent == null) return None
@@ -303,7 +270,7 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
     }
   }
 
-  private def promoteRows(key: (String, Seq[String], Boolean), dir: String, bytes: Long,
+  private def promoteRows(key: Key, dir: String, bytes: Long,
                           rows: Array[org.apache.spark.sql.Row],
                           schema: org.apache.spark.sql.types.StructType): Option[DataFrame] = {
     if (rows.length > maxLocalRows) {
@@ -316,14 +283,16 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
         None
       } else {
         Telemetry.l2Hits.increment()
-        planCache.synchronized { planCache.put(key, df); cachedBytes(key) = bytes }
+        planCache.synchronized {
+          planCache.put(key, QueryEngine.Entry(df, persistedBytes = Some(bytes)))
+        }
         Some(df)
       }
     } else {
       Telemetry.l2Hits.increment()
       val local = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
       planCache.synchronized {
-        planCache.put(key, local); localizedKeys += key; localRowsStore(key) = rows
+        planCache.put(key, QueryEngine.Entry(local, localRows = Some(rows), localized = true))
       }
       Some(local)
     }
@@ -354,11 +323,11 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
   @volatile var localizeWarmHits: Boolean = true
 
   /** Resolution-based rollup routing (graft.plans.RollupRouting) — on by
-    * default; registered rollups only exist when an operator materialized one.
+    * default; catalog rollups only exist when an operator materialized one.
     */
   @volatile var rollupRoutingEnabled: Boolean = true
 
-  /** True iff the most recent sql() was answered from a registered rollup
+  /** True iff the most recent sql() was answered from a catalog rollup
     * (observability for tests/telemetry, like lastPrunedPaths).
     */
   @volatile var lastServedFromRollup: Boolean = false
@@ -374,7 +343,7 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
   val lastServeMode: ThreadLocal[String] = ThreadLocal.withInitial(() => "")
 
   /** Naive-top-k rewrite (graft.plans.TopKRouting): `row_number() ≤ k` over
-    * the registered scan re-planned as the two-phase Operators.topKPerGroup.
+    * the bound scan re-planned as the two-phase Operators.topKPerGroup.
     * On by default — the naive form's window sort parallelism is the group
     * count, the one deliberate scale outlier in the bench record.
     */
@@ -400,7 +369,7 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
 
   /** Parsed-plan cache: one ANTLR parse per query TEXT, shared by predicate
     * extraction and execution (analysis resolves a fresh copy per call, so
-    * reusing the unresolved tree across registered view states is safe).
+    * reusing the unresolved tree across chunk snapshots is safe).
     */
   private val parsedPlans =
     new java.util.LinkedHashMap[String, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan](
@@ -424,8 +393,8 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
   /** Fallback leg of the two-phase extraction: when the parse-only result is
     * the default window or the full range, the WHERE may still carry foldable
     * time expressions (now() - interval, literal arithmetic). Mirror the
-    * reference's two-phase trick (bootstrap-register then analyze the RESOLVED
-    * plan, mod.rs:163-184): register everything, let the optimizer
+    * reference's two-phase trick (bootstrap-bind then analyze the RESOLVED
+    * plan, mod.rs:163-184): bind every chunk, let the optimizer
     * constant-fold, and re-extract from the optimized plan.
     */
   private def withOptimizedFallback(parsed: (TimeRange, Seq[ColumnPredicate]),
@@ -490,22 +459,14 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
         analyzeMemo.put(query, if (independent) Some(full) else None)
         full
     }
-    val basePaths = asOf match {
-      case Some(v) =>
-        graft.catalog.ChunkCatalog
-          .chunksInRangeOf(catalog.stateAt(v), range.startNs, range.endNs)
-          .filter(c => preds.forall(_.keepChunk(c)))
-          .map(_.path)
-      case None => prune(range, preds)
-    }
-    val paths = tenant match {
-      case Some(t) => basePaths
-        .filter(p => graft.catalog.ChunkCatalog.tenantOf(catalog.root, p) == t)
-      case None => basePaths
-    }
+    val st = asOf.fold(catalog.state)(catalog.stateAt)
+    if (asOf.isEmpty) dropReplaced(st)
+    val chunks = pruneChunks(st, range, preds)
+      .filter(c => tenant.forall(_ == ChunkCatalog.tenantOf(catalog.root, c.path)))
+    val paths = chunks.map(_.path)
     lastPrunedPaths = paths
     val split = catalog.hasActiveSplit
-    // rollup identity is part of the cache key: (de)registering a rollup must
+    // rollup identity is part of the cache key: adding or dropping a rollup must
     // never serve a stale cached plan built against the other source; the
     // topK-rewrite toggle likewise (a cached naive plan must not be served
     // while the rewrite is on, nor the reverse)
@@ -523,21 +484,20 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
         (if (topKMarker) Seq("topk:on") else Nil),
       split)
     lastServeMode.set("computed")
-    var toLocalize: DataFrame = null
+    var toLocalize: QueryEngine.Entry = null
     planCache.synchronized {
       val hit = planCache.get(key)
       if (hit != null) {
         Telemetry.cacheHits.increment()
         lastServeMode.set("l1")
-        lastServedFromRollup = rollupKeys(key)
-        lastTopKRouted = topKKeys(key)
+        lastServedFromRollup = hit.route == QueryEngine.Rollup
+        lastTopKRouted = hit.route == QueryEngine.TopK
         // persisted-but-not-yet-localized entry on a REPEAT hit → localize it
-        if (!localizeWarmHits || localizedKeys(key) || !cachedBytes.contains(key)) {
+        if (!localizeWarmHits || hit.localized || hit.persistedBytes.isEmpty) {
           // localized hit: expose the stored rows so sqlRows() can serve them
           // with ZERO plan execution (the reference's L1-serves-bytes shape)
-          if (localizedKeys(key))
-            localRowsStore.get(key).foreach(lastHitRows.set)
-          return hit
+          hit.localRows.foreach(lastHitRows.set)
+          return hit.df
         }
         toLocalize = hit
       }
@@ -552,46 +512,38 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
       lastServeMode.set("l2")
       return df
     }
-    val raw = planLock.synchronized {
-      register(paths)
-      // Reuse the cached PARSED tree — analysis resolves a fresh copy against
-      // the just-registered view, but the ANTLR parse is paid once per text.
-      val df = org.apache.spark.sql.GraftBridge.ofRows(spark, parsedPlan(query))
-      // Force resolution while we still hold the lock: the view lookup (and the
-      // scan's file listing) must bind to THIS query's registered path set.
-      df.queryExecution.assertAnalyzed()
-      df
-    }
+    val (raw, index) = bind(query, chunks)
     // Resolution-based rollup routing (graft.plans.RollupRouting): a bucketed
-    // aggregate the registered rollup can answer EXACTLY reads the rollup
+    // aggregate a catalog rollup can answer EXACTLY reads the rollup
     // table instead of raw chunks. Never during an active split (the rollup
-    // predates the split's dedup semantics); a failed match routes to raw.
+    // predates the split's dedup semantics) nor over an empty chunk set (raw
+    // answers empty); a failed match routes to raw.
     val routed: Option[DataFrame] =
-      if (rollups.isEmpty) None
+      if (rollups.isEmpty || chunks.isEmpty) None
       else
         try graft.plans.RollupRouting.route(spark, rollups,
-          raw.queryExecution.analyzed, paths)
+          raw.queryExecution.analyzed, index)
         catch { case scala.util.control.NonFatal(_) => None }
     lastServedFromRollup = routed.isDefined
     lastTopKRouted = false // may be overwritten below; must not stay stale
     routed.foreach { r =>
       Telemetry.rollupRouted.increment()
-      planCache.synchronized { planCache.put(key, r); rollupKeys += key }
+      planCache.synchronized { planCache.put(key, QueryEngine.Entry(r, route = QueryEngine.Rollup)) }
       return r
     }
     // Two-phase top-k rewrite (graft.plans.TopKRouting): the naive
-    // row_number-filter window shape over the registered scan re-plans as
+    // row_number-filter window shape over the bound scan re-plans as
     // Operators.topKPerGroup — same rows, parallelism no longer bounded by
     // the group count. Skipped during an active split (the raw path applies
-    // split dedup); a failed match routes to raw.
+    // split dedup) and over an empty chunk set; a failed match routes to raw.
     val topk: Option[DataFrame] =
-      if (!topKRoutingEnabled || split) None
+      if (!topKRoutingEnabled || split || chunks.isEmpty) None
       else
-        try graft.plans.TopKRouting.route(spark, raw.queryExecution.analyzed, paths)
+        try graft.plans.TopKRouting.route(spark, raw.queryExecution.analyzed, index)
         catch { case scala.util.control.NonFatal(_) => None }
     lastTopKRouted = topk.isDefined
     topk.foreach { r =>
-      planCache.synchronized { planCache.put(key, r); topKKeys += key }
+      planCache.synchronized { planCache.put(key, QueryEngine.Entry(r, route = QueryEngine.TopK)) }
       return r
     }
     try adaptiveStats.recordFromPlan(raw.queryExecution.analyzed)
@@ -616,18 +568,25 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
     val persisted = resultCacheEnabled && estBytes <= limits.maxCachedResultBytes
     if (persisted)
       result.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // A persisted entry keeps a fresh Dataset over the analyzed plan, not
+    // `result`: the caller's run of `result` pins its whole optimized and
+    // physical plan, which a hit never needs — it reads the cached blocks,
+    // whose own plan Spark's CacheManager already holds.
+    val entry =
+      if (persisted) QueryEngine.Entry(GraftBridge.ofRows(spark, result.queryExecution.analyzed),
+        persistedBytes = Some(estBytes.toLong))
+      else QueryEngine.Entry(result)
     planCache.synchronized {
-      planCache.put(key, result)
+      planCache.put(key, entry)
       if (persisted) {
-        cachedBytes(key) = estBytes.toLong
         // Evict LRU persisted entries until the summed estimates fit the budget
         // (never the entry just added — it is MRU by definition).
-        var retained = cachedBytes.values.sum
+        var retained = planCache.values().asScala.flatMap(_.persistedBytes).sum
         val it = planCache.entrySet().iterator()
         while (retained > limits.maxRetainedCacheBytes && it.hasNext) {
           val e = it.next()
-          if (e.getKey != key && cachedBytes.contains(e.getKey)) {
-            retained -= cachedBytes(e.getKey)
+          if (e.getKey != key) e.getValue.persistedBytes.foreach { bytes =>
+            retained -= bytes
             dropEntry(e.getKey, e.getValue)
             it.remove()
           }
@@ -637,12 +596,38 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
     result
   }
 
+  /** Catalog version whose replaced chunks [[dropReplaced]] last swept out. */
+  @volatile private var sweptVersion = Long.MinValue
+
+  /** Once per catalog version: drop the L1 entries keyed to a chunk the live
+    * state `st` no longer holds. Compaction or retention replaced that chunk,
+    * so no live query keys to the entry again; a persisted result is
+    * unpersisted, not demoted to L2, whose keys are the same.
+    */
+  private def dropReplaced(st: ChunkCatalog.CatalogState): Unit =
+    if (st.version != sweptVersion) planCache.synchronized {
+      sweptVersion = st.version
+      val it = planCache.entrySet().iterator()
+      while (it.hasNext) {
+        val e = it.next()
+        val replaced = e.getKey._2.exists(p =>
+          !p.startsWith("rollup:") && !p.startsWith("topk:") && !st.chunks.contains(p))
+        if (replaced) {
+          if (e.getValue.persistedBytes.isDefined)
+            try e.getValue.df.unpersist(blocking = false)
+            catch { case scala.util.control.NonFatal(_) => () }
+          it.remove()
+        }
+      }
+    }
+
   /** True if the given query's most recent result was persisted in the L1
     * result-cache tier (observability for tests/telemetry).
     */
   def isResultCached(query: String): Boolean = planCache.synchronized {
-    cachedBytes.keysIterator.exists(_._1 == query) ||
-      localizedKeys.exists(_._1 == query)
+    planCache.entrySet().asScala.exists { e =>
+      e.getKey._1 == query && (e.getValue.persistedBytes.isDefined || e.getValue.localized)
+    }
   }
 
   /** Probe/test hook: evict a query's L1 entries through the normal dropEntry
@@ -678,20 +663,23 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
       thunk: () => Array[org.apache.spark.sql.Row]): Array[org.apache.spark.sql.Row] =
     try thunk() catch { case scala.util.control.NonFatal(_) => null }
 
-  private def localizeHit(key: (String, Seq[String], Boolean), df: DataFrame): DataFrame = {
-    val rows = collectForLocalize(() => df.collect())
+  private def localizeHit(key: Key, hit: QueryEngine.Entry): DataFrame = {
+    val rows = collectForLocalize(() => hit.df.collect())
     planCache.synchronized {
-      if (localizedKeys(key)) return planCache.getOrDefault(key, df)
-      localizedKeys += key // even on failure/oversize: don't re-collect every hit
-      if (rows == null || rows.length > maxLocalRows) df
-      else {
-        val local = spark.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
-        try df.unpersist(blocking = false) catch { case scala.util.control.NonFatal(_) => () }
+      val cur = planCache.get(key)
+      if (cur != null && cur.localized) return cur.df
+      if (rows == null || rows.length > maxLocalRows) {
+        // even on failure/oversize: don't re-collect every hit
+        if (cur != null) planCache.put(key, cur.copy(localized = true))
+        hit.df
+      } else {
+        val local = spark.createDataFrame(java.util.Arrays.asList(rows: _*), hit.df.schema)
+        try hit.df.unpersist(blocking = false)
+        catch { case scala.util.control.NonFatal(_) => () }
         // the executor-storage copy is gone — stop charging it to the
-        // retained-bytes budget (localizedKeys keeps isResultCached true)
-        cachedBytes.remove(key)
-        planCache.put(key, local)
-        localRowsStore(key) = rows
+        // retained-bytes budget (`localized` keeps isResultCached true)
+        planCache.put(key, hit.copy(df = local, persistedBytes = None,
+          localRows = Some(rows), localized = true))
         local
       }
     }
@@ -741,18 +729,15 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
     sqlRows(query, nowNs).clone()
 
   private def analyzeOptimized(query: String, nowNs: Long): Option[(TimeRange, Seq[ColumnPredicate])] =
-    try planLock.synchronized {
-      register(catalog.allChunks.map(_.path))
+    try {
       // Optimize the ANALYZED plan directly — queryExecution.optimizedPlan
       // first substitutes any cached (persisted) result as an
       // InMemoryRelation, which erases the Filter nodes: a repeat of a
       // result-cached query would re-extract NO bounds, fall to the default
       // window, and prune to the wrong chunk set.
-      val analyzed = org.apache.spark.sql.GraftBridge.ofRows(spark, parsedPlan(query))
-        .queryExecution.analyzed
+      val analyzed = bind(query, catalog.allChunks)._1.queryExecution.analyzed
       val optimized = spark.sessionState.optimizer.execute(analyzed)
-      val extracted = PredicateExtraction.extract(optimized, nowNs)
-      Some(extracted)
+      Some(PredicateExtraction.extract(optimized, nowNs))
     } catch { case scala.util.control.NonFatal(_) => None }
 
   /** Step 1: extract time range + column predicates from the query's WHERE clauses.
@@ -777,64 +762,38 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
 
   /** Step 2: catalog prune — time index then zone maps. */
   def prune(range: TimeRange, preds: Seq[ColumnPredicate]): Seq[String] =
-    catalog.chunksInRange(range.startNs, range.endNs)
+    pruneChunks(catalog.state, range, preds).map(_.path)
+
+  private def pruneChunks(st: ChunkCatalog.CatalogState, range: TimeRange,
+                          preds: Seq[ColumnPredicate]): Seq[ChunkMeta] =
+    ChunkCatalog.chunksInRangeOf(st, range.startNs, range.endNs)
       .filter(c => preds.forall(_.keepChunk(c)))
-      .map(_.path)
 
-  /** The temp-view object this engine last registered as `metrics` — identity
-    * is checked on every register() so the path-set short-circuit can never
-    * trust a view some OTHER code on the same session replaced (e.g. a
-    * transpiler helper calling createOrReplaceTempView("metrics")): resolving
-    * against a foreign view would silently answer from the wrong relation.
+  /** Step 3: the query analyzed with `metrics` bound to a relation over a
+    * ZoneMapFileIndex pinned to `chunks`, plus that index — the identity the
+    * routers match the engine's own scan by. Reuses the cached PARSED tree
+    * (the ANTLR parse is paid once per text); binding builds a fresh copy.
     */
-  @volatile private var lastRegisteredView: AnyRef = null
-
-  private def currentMetricsView(): AnyRef =
-    try spark.sessionState.catalog.getTempView("metrics").orNull
-    catch { case scala.util.control.NonFatal(_) => null }
-
-  /** Step 3: (re)register the `metrics` view over exactly the pruned chunk set; cached
-    * when the path set is unchanged AND the live view is still ours
-    * (engine.rs:133-187).
-    */
-  def register(paths: Seq[String]): Unit = synchronized {
-    if (lastRegisteredPaths == paths && lastRegisteredView != null &&
-      (lastRegisteredView eq currentMetricsView())) return
-    val df =
-      if (paths.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          MetricSchema.default)
-      else {
-        // Catalog-held union schema → the scan skips the distributed
-        // parquet-footer inference job; mergeSchema only as fallback for
-        // chunks registered without a stored schema.
-        val metas = paths.flatMap(catalog.state.chunks.get)
-        graft.catalog.ChunkCatalog.mergedSchema(metas) match {
-          case Some(schema) if metas.size == paths.size =>
-            spark.read.schema(schema).parquet(paths: _*)
-          case _ => spark.read.option("mergeSchema", "true").parquet(paths: _*)
-        }
-      }
-    df.createOrReplaceTempView("metrics")
-    lastRegisteredPaths = paths
-    lastRegisteredView = currentMetricsView()
+  private def bind(query: String, chunks: Seq[ChunkMeta]): (DataFrame, FileIndex) = {
+    val index = ZoneMapFileIndex(spark, catalog.root, chunks)
+    val relation = GraftBridge.fileIndexRelation(spark, index, index.dataSchema)
+    (GraftBridge.ofRows(spark, QueryEngine.bindMetrics(parsedPlan(query), relation)), index)
   }
 
   /** information_schema-equivalent label discovery
     * (reference src/api/query/prometheus_api.rs:289-291): all string columns of the
-    * current `metrics` view minus internal columns, plus `__name__`.
+    * all-chunks `metrics` schema minus internal columns, plus `__name__`.
     */
-  def labels(): Seq[String] = planLock.synchronized {
-    register(catalog.allChunks.map(_.path))
-    val cols = spark.table("metrics").schema.fieldNames.toSeq
+  def labels(): Seq[String] = {
+    val cols = ZoneMapFileIndex(spark, catalog.root, catalog.allChunks).dataSchema.fieldNames.toSeq
     ("__name__" +: cols.filterNot(MetricSchema.internalColumns.contains)).distinct.sorted
   }
 
   /** `/api/v1/label/<name>/values`, optionally matcher- and time-filtered
     * (reference prometheus_api.rs:330-470 filters values by `match[]` and
-    * start/end). The filtered path is served over the ZoneMapFileIndex table,
-    * so a time bound or an equality matcher prunes chunks at scan planning —
-    * an unfiltered dropdown refresh is the only shape that scans everything.
+    * start/end). Served over the ZoneMapFileIndex table, so a time bound or
+    * an equality matcher prunes chunks at scan planning — an unfiltered
+    * dropdown refresh is the only shape that scans everything.
     */
   def labelValues(label: String,
                   matchers: Seq[graft.promql.LabelMatcher] = Nil,
@@ -843,25 +802,18 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
     require(graft.promql.PromQL.isValidIdentifier(label),
       s"invalid label identifier: $label")
     val c = if (label == "__name__") MetricSchema.MetricNameCol else label
-    if (matchers.isEmpty && startNs.isEmpty && endNs.isEmpty)
-      planLock.synchronized {
-        register(catalog.allChunks.map(_.path))
-        spark.table("metrics").select(col(c)).where(col(c).isNotNull).distinct()
-      }
-    else {
-      val base = graft.plans.ZoneMapFileIndex.table(spark, catalog)
-      val timed = (startNs, endNs) match {
-        case (Some(s), Some(e)) =>
-          base.where(col(MetricSchema.TimestampNsCol).between(s, e))
-        case (Some(s), None) => base.where(col(MetricSchema.TimestampNsCol) >= s)
-        case (None, Some(e)) => base.where(col(MetricSchema.TimestampNsCol) <= e)
-        case (None, None) => base
-      }
-      val matched = matchers.foldLeft(timed) { (df, m) =>
-        df.filter(org.apache.spark.sql.functions.expr(graft.promql.PromQL.matcherToSql(m)))
-      }
-      matched.select(col(c)).where(col(c).isNotNull).distinct()
+    val base = ZoneMapFileIndex.table(spark, catalog)
+    val timed = (startNs, endNs) match {
+      case (Some(s), Some(e)) =>
+        base.where(col(MetricSchema.TimestampNsCol).between(s, e))
+      case (Some(s), None) => base.where(col(MetricSchema.TimestampNsCol) >= s)
+      case (None, Some(e)) => base.where(col(MetricSchema.TimestampNsCol) <= e)
+      case (None, None) => base
     }
+    val matched = matchers.foldLeft(timed) { (df, m) =>
+      df.filter(org.apache.spark.sql.functions.expr(graft.promql.PromQL.matcherToSql(m)))
+    }
+    matched.select(col(c)).where(col(c).isNotNull).distinct()
   }
 
   /** `/api/v1/series`: DISTINCT over (metric_name + every label column), optionally
@@ -869,7 +821,7 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
     * ZoneMapFileIndex table so equality matchers prune chunks at scan planning.
     */
   def series(matchers: Seq[graft.promql.LabelMatcher] = Nil): DataFrame = {
-    val base = graft.plans.ZoneMapFileIndex.table(spark, catalog)
+    val base = ZoneMapFileIndex.table(spark, catalog)
     val cols = MetricSchema.MetricNameCol +:
       base.schema.fieldNames.toSeq.filterNot(MetricSchema.internalColumns.contains)
     val filtered = matchers.foldLeft(base) { (df, m) =>
@@ -880,6 +832,55 @@ final class QueryEngine(val spark: SparkSession, val catalog: ChunkCatalog,
 }
 
 object QueryEngine {
+
+  /** How a cached plan was routed (keeps lastServedFromRollup /
+    * lastTopKRouted truthful on cache hits).
+    */
+  private sealed trait Route
+  private case object Raw extends Route
+  private case object Rollup extends Route
+  private case object TopK extends Route
+
+  /** One plan-cache value. `persistedBytes`: the result's size estimate when
+    * its blocks are persisted (None for plan-only entries). `localized`: a
+    * repeat hit already tried the swap to a driver-local LocalRelation —
+    * `localRows` holds the collected rows when it succeeded, the zero-row-work
+    * serve tier [[QueryEngine.sqlRows]] hands straight back.
+    */
+  private final case class Entry(df: DataFrame,
+                                 persistedBytes: Option[Long] = None,
+                                 localRows: Option[Array[org.apache.spark.sql.Row]] = None,
+                                 localized: Boolean = false,
+                                 route: Route = Raw)
+
+  /** Bind the table `metrics` in a PARSED plan: every reference to it —
+    * inside subquery expressions too, name matched case-insensitively —
+    * becomes `relation` under the alias `metrics`, with fresh attribute ids
+    * per reference (a self-join needs no deduplication). A CTE named
+    * `metrics` keeps Spark's shadowing: CTE definitions see earlier
+    * definitions (a recursive one also itself), the body sees them all, and
+    * shadowed references are left for the analyzer to resolve to the CTE.
+    */
+  private[graft] def bindMetrics(plan: LogicalPlan, relation: LogicalRelation): LogicalPlan = {
+    def isMetrics(name: String): Boolean = name.equalsIgnoreCase("metrics")
+    def bind(p: LogicalPlan): LogicalPlan = p match {
+      case UnresolvedRelation(Seq(name), _, _) if isMetrics(name) =>
+        SubqueryAlias("metrics", relation.newInstance())
+      case w: UnresolvedWith =>
+        var shadowed = false
+        val defs = w.cteRelations.map { case (name, body, depth) =>
+          val visible = shadowed || (w.allowRecursion && isMetrics(name))
+          shadowed ||= isMetrics(name)
+          (name, if (visible) body else bind(body).asInstanceOf[SubqueryAlias], depth)
+        }
+        w.copy(child = if (shadowed) w.child else bind(w.child), cteRelations = defs)
+      case other =>
+        other.mapChildren(bind).transformExpressions {
+          case e: SubqueryExpression => e.withNewPlan(bind(e.plan))
+        }
+    }
+    bind(plan)
+  }
 
   /** Reference QueryNode defaults: 100 concurrent queries, 300 s statement
     * timeout (src/query/mod.rs:50-60). Cache bounds are ours: the reference's L1

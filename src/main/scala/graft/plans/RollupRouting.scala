@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Count, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.plans.logical._
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions.{col, expr => sqlExpr, max => fMax, min => fMin, round => fRound, sum => fSum}
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, TimestampType}
 import graft.catalog.RollupMeta
@@ -20,8 +21,8 @@ import graft.schema.MetricSchema
   * because every stored component is associative (sum/min/max/count merge;
   * avg derives last as Σsum/Σvalue_count).
   *
-  * The match runs on the ANALYZED plan of the user's SQL over the registered
-  * `metrics` view, so routing is transparent: same SQL text answers from raw
+  * The match runs on the ANALYZED plan of the user's SQL over the engine-bound
+  * `metrics` relation, so routing is transparent: same SQL text answers from raw
   * chunks when no rollup qualifies. Anything the matcher does not fully
   * understand routes to raw — the rewrite is never allowed to be lossy.
   *
@@ -37,22 +38,19 @@ object RollupRouting {
 
   /** Try every registered rollup, coarsest resolution first (fewest rows read).
     *
-    * `registeredChunkPaths` is the engine's OWN metrics relation identity: the
-    * rewrite fires only when the plan's leaf scans exactly those files.
-    * Without the check, any user SQL over an unrelated table that happens to
-    * carry the metrics column names (a staging import, another tenant's view)
-    * would silently be answered from THIS warehouse's rollup.
+    * `index` is the engine's OWN metrics relation identity — the snapshot
+    * index it bound `metrics` to for this query: the rewrite fires only when
+    * the plan's leaf scans that very index. Without the check, any user SQL
+    * over an unrelated table that happens to carry the metrics column names
+    * (a staging import, another tenant's view) would silently be answered
+    * from THIS warehouse's rollup.
     */
   def route(spark: SparkSession, rollups: Seq[RollupMeta],
             analyzed: LogicalPlan,
-            registeredChunkPaths: Seq[String]): Option[DataFrame] = {
+            index: FileIndex): Option[DataFrame] = {
     val candidates = rollups.sortBy(-_.resolutionSeconds)
-    val expected = registeredChunkPaths.map(normalizePath).toSet
-    candidates.view.flatMap(r => routeOne(spark, r, analyzed, expected)).headOption
+    candidates.view.flatMap(r => routeOne(spark, r, analyzed, index)).headOption
   }
-
-  private def normalizePath(p: String): String =
-    new org.apache.hadoop.fs.Path(p).toUri.getPath
 
   // ---- plan matching -------------------------------------------------------
 
@@ -75,7 +73,7 @@ object RollupRouting {
 
   private def routeOne(spark: SparkSession, rollup: RollupMeta,
                        analyzed: LogicalPlan,
-                       expectedPaths: Set[String]): Option[DataFrame] = {
+                       index: FileIndex): Option[DataFrame] = {
     val resNs = rollup.resolutionSeconds * 1000000000L
 
     // [Sort] on top (re-applied after the rewrite, by output-column name)
@@ -87,8 +85,8 @@ object RollupRouting {
       case a: Aggregate => a
       case _ => return None
     }
-    // [Filter] → metrics leaf (through view/alias wrappers)
-    val (conjuncts, leafOk) = stripToRelation(agg.child, expectedPaths)
+    // [Filter] → metrics leaf (through alias wrappers)
+    val (conjuncts, leafOk) = stripToRelation(agg.child, index)
     if (!leafOk) return None
 
     val groupable = Set(MetricSchema.MetricNameCol) ++ rollup.labelCols
@@ -212,32 +210,20 @@ object RollupRouting {
     Some(sorted)
   }
 
-  /** Descend through view/alias wrappers, collecting Filter conjuncts; true
-    * iff the leaf IS the registered metrics view's backing scan — a file
-    * relation over exactly the engine's registered chunk paths. A file
-    * relation over anything else (a user's own parquet table with the same
-    * column names) must NOT be rewritten. The only accepted non-file leaf is
-    * the engine's empty-warehouse placeholder, and only when the engine has
-    * no registered paths at all.
+  /** Descend through alias wrappers, collecting Filter conjuncts; true
+    * iff the leaf IS the engine's bound metrics scan — a file relation over
+    * exactly the engine's snapshot index. A file relation over anything else
+    * (a user's own parquet table with the same column names) must NOT be
+    * rewritten, and no other leaf qualifies.
     */
   private def stripToRelation(plan: LogicalPlan,
-                              expectedPaths: Set[String]): (Seq[Expression], Boolean) =
+                              index: FileIndex): (Seq[Expression], Boolean) =
     plan match {
       case Filter(cond, child) =>
-        val (cs, ok) = stripToRelation(child, expectedPaths)
+        val (cs, ok) = stripToRelation(child, index)
         (splitConjuncts(cond) ++ cs, ok)
-      case SubqueryAlias(_, child) => stripToRelation(child, expectedPaths)
-      case v: View => stripToRelation(v.child, expectedPaths)
-      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        lr.relation match {
-          case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            val roots = fs.location.rootPaths.map(p => p.toUri.getPath).toSet
-            (Nil, roots.nonEmpty && roots == expectedPaths)
-          case _ => (Nil, false)
-        }
-      // No other leaf qualifies — a LocalRelation/LogicalRDD with metrics-
-      // shaped columns could be a USER's table (and with an empty pruned
-      // path set, routing could only restate an empty answer anyway).
+      case SubqueryAlias(_, child) => stripToRelation(child, index)
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) => (Nil, fs.location eq index)
       case _ => (Nil, false)
     }
 

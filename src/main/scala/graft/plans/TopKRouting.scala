@@ -3,6 +3,7 @@ package graft.plans
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical._
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{IntegerType, LongType}
 
@@ -23,8 +24,8 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * → [Project]* → Window([rn = row_number()]) → child, where the window's
   * partition/order keys are plain attributes (the analyzer extracts ordering
   * EXPRESSIONS into `_w0...` aliases in the window's child projection, so this
-  * covers expression ordering too) and the child's leaves are exactly the
-  * engine's registered chunk scan — same identity discipline as RollupRouting:
+  * covers expression ordering too) and the child's leaves all scan the
+  * engine's bound snapshot index — same identity discipline as RollupRouting:
   * a user's own table is never rewritten. Any shape the matcher does not fully
   * understand routes to the raw plan.
   *
@@ -36,11 +37,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
 object TopKRouting {
 
   def route(spark: SparkSession, analyzed: LogicalPlan,
-            registeredChunkPaths: Seq[String]): Option[DataFrame] = {
-    val expected = registeredChunkPaths
-      .map(p => new org.apache.hadoop.fs.Path(p).toUri.getPath).toSet
-    if (expected.isEmpty) return None
-
+            index: FileIndex): Option[DataFrame] = {
     // [Sort] on top — reapplied by output-column name after the rewrite
     val (sortOrders, p0) = analyzed match {
       case Sort(orders, true, child, _) => (orders, child)
@@ -89,16 +86,11 @@ object TopKRouting {
     if ((childNames :+ rnName).distinct.size != childNames.size + 1) return None
 
     // identity guard: the subtree below the window must scan exactly the
-    // engine's registered chunk set (reused wholesale, filters included)
+    // engine's bound snapshot index (reused wholesale, filters included)
     val leavesOk = {
       val leaves = window.child.collectLeaves()
       leaves.nonEmpty && leaves.forall {
-        case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          lr.relation match {
-            case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-              fs.location.rootPaths.map(_.toUri.getPath).toSet == expected
-            case _ => false
-          }
+        case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) => fs.location eq index
         case _ => false
       }
     }

@@ -1,12 +1,13 @@
 package graft.plans
 
+import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
 import org.apache.spark.sql.types.StructType
-import graft.catalog.ChunkCatalog
+import graft.catalog.{ChunkCatalog, ChunkMeta}
 import graft.prune.PredicateExtraction
 
 /** Catalog-zone-map pruning INSIDE the DataSource (SURVEY §7.3 preference (c):
@@ -22,6 +23,12 @@ import graft.prune.PredicateExtraction
   * row-group stats then re-prune inside the surviving files (the reference's
   * two-tier metadata-then-parquet scheme, README.md:288-290).
   *
+  * The index is PINNED to the chunk snapshot it was built over: it lists and
+  * sizes exactly `chunks`, never the catalog's live state, so a plan keeps
+  * reading the chunk set it was analyzed against. QueryEngine binds every
+  * query's `metrics` to an index over the chunks it just pruned (or, AS OF a
+  * version, that version's chunks).
+  *
   * Semantics note: the engine's default last-1-hour window (applied when a
   * query has NO time predicate) is a QUERY-level rule and stays in
   * QueryEngine.sql; a filter-less scan here correctly sees all chunks.
@@ -29,20 +36,19 @@ import graft.prune.PredicateExtraction
   * Driver-side only, O(#chunks) metadata — the data path is untouched.
   */
 final class ZoneMapFileIndex(
-    spark: SparkSession,
-    catalog: ChunkCatalog,
-    dataSchema: StructType) extends FileIndex {
+    root: java.nio.file.Path,
+    chunks: Seq[ChunkMeta],
+    val dataSchema: StructType) extends FileIndex {
 
   /** Last listFiles pruning decision — observability for tests/telemetry. */
   @volatile var lastSelectedPaths: Seq[String] = Nil
 
-  override def rootPaths: Seq[HPath] = Seq(new HPath(catalog.root.toUri))
+  override def rootPaths: Seq[HPath] = Seq(new HPath(root.toUri))
 
   override def partitionSchema: StructType = StructType(Nil)
 
   override def listFiles(partitionFilters: Seq[Expression],
                          dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val chunks = catalog.allChunks
     val selected =
       if (dataFilters.isEmpty) chunks
       else {
@@ -71,49 +77,75 @@ final class ZoneMapFileIndex(
   private val fileCache =
     new java.util.concurrent.ConcurrentHashMap[String, Array[FileStatus]]()
 
+  /** The chunk dir's parquet files, skipping `_`/`.`-prefixed names at any
+    * depth (committer scratch, checksums) exactly like Spark's own listing.
+    * A missing chunk dir fails the scan, as a missing path fails
+    * InMemoryFileIndex: a snapshot whose chunks GC already deleted (an AS OF
+    * version past the grace window) must not answer from what is left.
+    */
   private def listChunkFiles(dir: String): Seq[FileStatus] =
     fileCache.computeIfAbsent(dir, d => {
       val p = java.nio.file.Paths.get(d)
-      if (!java.nio.file.Files.exists(p)) Array.empty
-      else {
-        val s = java.nio.file.Files.walk(p)
-        try s.filter(f => java.nio.file.Files.isRegularFile(f) &&
-            f.getFileName.toString.endsWith(".parquet"))
-          .map[FileStatus] { f =>
-            new FileStatus(java.nio.file.Files.size(f), false, 1, 134217728L,
-              java.nio.file.Files.getLastModifiedTime(f).toMillis,
-              new HPath(f.toUri))
-          }
-          .toArray(n => new Array[FileStatus](n))
-        finally s.close()
-      }
+      if (!java.nio.file.Files.exists(p))
+        throw new java.io.FileNotFoundException(s"chunk path does not exist: $d")
+      val s = java.nio.file.Files.walk(p)
+      try s.filter(f => java.nio.file.Files.isRegularFile(f) &&
+          f.getFileName.toString.endsWith(".parquet") &&
+          p.relativize(f).iterator().asScala.forall { n =>
+            val name = n.toString
+            !name.startsWith("_") && !name.startsWith(".")
+          })
+        .map[FileStatus] { f =>
+          new FileStatus(java.nio.file.Files.size(f), false, 1, 134217728L,
+            java.nio.file.Files.getLastModifiedTime(f).toMillis,
+            new HPath(f.toUri))
+        }
+        .toArray(n => new Array[FileStatus](n))
+      finally s.close()
     }).toSeq
 
   override def inputFiles: Array[String] =
-    catalog.allChunks.flatMap(c => listChunkFiles(c.path).map(_.getPath.toString)).toArray
+    chunks.flatMap(c => listChunkFiles(c.path).map(_.getPath.toString)).toArray
 
-  override def refresh(): Unit = {
-    fileCache.clear()
-    catalog.invalidateCache()
-  }
+  override def refresh(): Unit = fileCache.clear()
 
-  override def sizeInBytes: Long = catalog.allChunks.map(_.sizeBytes).sum
+  override def sizeInBytes: Long = chunks.map(_.sizeBytes).sum
 
   override def metadataOpsTimeNs: Option[Long] = None
+
+  // Equal over the same chunk set, like InMemoryFileIndex over the same root
+  // paths: plans over equal snapshots match in Spark's CacheManager (chunk
+  // files are immutable, so a persisted result stays valid for them).
+  private lazy val pathSet = chunks.iterator.map(_.path).toSet
+
+  override def equals(other: Any): Boolean = other match {
+    case o: ZoneMapFileIndex => o.pathSet == pathSet
+    case _ => false
+  }
+
+  override def hashCode(): Int = pathSet.hashCode()
 }
 
 object ZoneMapFileIndex {
 
-  /** A DataFrame over the catalog's chunk set whose scans self-prune by zone
-    * maps. Schema from the catalog when every chunk carries one, else inferred.
+  /** An index pinned to `chunks`. Schema from the catalog-held DDL when every
+    * chunk carries one (no footer reads), else inferred; the empty set gets
+    * the default metrics schema, so a query over it returns 0 rows.
     */
-  def table(spark: SparkSession, catalog: ChunkCatalog): org.apache.spark.sql.DataFrame = {
-    val chunks = catalog.allChunks
+  def apply(spark: SparkSession, root: java.nio.file.Path,
+            chunks: Seq[ChunkMeta]): ZoneMapFileIndex = {
     val schema = ChunkCatalog.mergedSchema(chunks).getOrElse {
       if (chunks.isEmpty) graft.schema.MetricSchema.default
       else spark.read.option("mergeSchema", "true").parquet(chunks.map(_.path): _*).schema
     }
-    val index = new ZoneMapFileIndex(spark, catalog, schema)
-    org.apache.spark.sql.GraftBridge.fileIndexTable(spark, index, schema)
+    new ZoneMapFileIndex(root, chunks, schema)
+  }
+
+  /** A DataFrame over a snapshot of the catalog's whole chunk set whose scans
+    * self-prune by zone maps.
+    */
+  def table(spark: SparkSession, catalog: ChunkCatalog): org.apache.spark.sql.DataFrame = {
+    val index = ZoneMapFileIndex(spark, catalog.root, catalog.allChunks)
+    GraftBridge.ofRows(spark, GraftBridge.fileIndexRelation(spark, index, index.dataSchema))
   }
 }

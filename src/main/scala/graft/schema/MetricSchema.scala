@@ -81,7 +81,7 @@ object MetricSchema {
     StructType(base ++ labelFields ++ values)
   }
 
-  /** The default empty-store schema registered at startup so `SELECT ... FROM metrics`
+  /** The schema `metrics` binds to over an empty chunk set, so `SELECT ... FROM metrics`
     * on an empty store returns 0 rows, not an error (reference
     * src/query/engine.rs:97-101,189-205).
     */

@@ -274,7 +274,7 @@ class EngineSpec extends AnyFunSuite {
     // conf isolation: the serving profile must not leak into the parent session
     assert(interactive.spark.conf.get("spark.sql.codegen.wholeStage") == "false")
     assert(spark.conf.get("spark.sql.codegen.wholeStage", "true") == "true")
-    // view isolation: each engine registers `metrics` in its own catalog
+    // session isolation: the interactive engine plans on its own child session
     assert(interactive.spark ne spark)
   }
 
@@ -349,10 +349,11 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("concurrent queries with different pruned chunk sets never cross-contaminate") {
-    // Regression: prune→register→spark.sql used to be non-atomic, so two
-    // concurrent sql() calls could resolve the shared `metrics` view against
-    // each other's registered path set — a query silently reading the WRONG
-    // chunks. Planning now serializes under a lock; execution stays concurrent.
+    // Regression: planning once went through one shared `metrics` view, so two
+    // concurrent sql() calls could resolve against each other's chunk set — a
+    // query silently reading the WRONG chunks. Each query now binds `metrics`
+    // to its own pruned snapshot, so planning and execution are both
+    // concurrent with nothing shared to race on.
     val (eng, _) = freshEngine()
     eng.resultCacheEnabled = false
     val iters = 25
@@ -401,5 +402,172 @@ class EngineSpec extends AnyFunSuite {
     // live query again (cache scoping didn't leak the historical path set)
     assert(eng.sql(s"SELECT count(*) AS c FROM metrics WHERE $range")
       .collect()(0).getLong(0) == 17)
+  }
+
+  test("a caller-owned `metrics` temp view on the engine's session is left " +
+    "untouched; sql, labels and labelValues answer from the catalog") {
+    val (eng, _) = freshEngine()
+    import spark.implicits._
+    // the shape SparkEntry's PromQL queries register on the same session
+    Seq((t0, "caller_metric", 7.0, "x")).toDF("timestamp_ns", "metric_name", "value_f64", "caller_label")
+      .createOrReplaceTempView("metrics")
+    try {
+      val view = spark.sessionState.catalog.getTempView("metrics").get
+      val n = eng.sql(s"SELECT COUNT(*) AS c FROM metrics " +
+        s"WHERE timestamp_ns >= $t0 AND timestamp_ns < ${t0 + 3 * hourNs}").collect()(0).getLong(0)
+      assert(n == 72L)
+      assert(eng.labels() == Seq("__name__", "host"))
+      assert(eng.labelValues("__name__").collect().map(_.getString(0)).sorted.toSeq ==
+        Seq("cpu_usage", "mem_usage"))
+      assert(spark.sessionState.catalog.getTempView("metrics").get == view,
+        "the engine replaced the caller's `metrics` view")
+      assert(spark.table("metrics").collect().map(_.getString(1)).toSeq == Seq("caller_metric"))
+    } finally spark.catalog.dropTempView("metrics")
+  }
+
+  test("sqlAt a version whose chunks compaction rewrote reads that version's " +
+    "rows from its own ChunkMeta schemas, with no footer inference") {
+    val cat = new ChunkCatalog(Files.createTempDirectory("graft_eng_ttc_"),
+      cacheTtlMs = 0L, manifestRetain = 8)
+    val writer = new ChunkWriter(cat)
+    def batch(h: Int, minutes: Range) = Converters.pointsToDf(spark, minutes.map(i =>
+      MetricPoint(t0 + h * hourNs + i * 60L * 1000000000L, "cpu_usage",
+        i.toDouble, Map("host" -> "s1"))))
+    writer.write(batch(0, 0 until 10))
+    writer.write(batch(0, 30 until 35))
+    val v = cat.state.version
+    val vPaths = cat.allChunks.map(_.path).toSet
+    assert(vPaths.size == 2)
+    new graft.compact.Compactor(spark, cat).compactGroup(cat.allChunks)
+    writer.write(batch(1, 0 until 7))
+    assert(cat.allChunks.forall(c => !vPaths(c.path)), "test premise: v's chunks rewritten")
+    val eng = new QueryEngine(spark, cat)
+    val q = s"SELECT count(*) AS c, sum(value_f64) AS s FROM metrics " +
+      s"WHERE timestamp_ns >= $t0 AND timestamp_ns < ${t0 + 3 * hourNs}"
+    var asof: org.apache.spark.sql.DataFrame = null
+    assert(jobsSubmittedBy { asof = eng.sqlAt(v, q) } == 0,
+      "binding AS OF v must take the schema from v's ChunkMeta, not infer it from footers")
+    assert(eng.lastPrunedPaths.toSet == vPaths)
+    val row = asof.collect()(0)
+    assert(row.getLong(0) == 15L && row.getDouble(1) == (0 until 10).sum + (30 until 35).sum)
+    assert(eng.sql(q).collect()(0).getLong(0) == 22L)
+  }
+
+  test("sqlAt a version whose chunks GC has deleted fails instead of answering " +
+    "from what is left") {
+    val cat = new ChunkCatalog(Files.createTempDirectory("graft_eng_gc_"),
+      cacheTtlMs = 0L, manifestRetain = 8)
+    val writer = new ChunkWriter(cat)
+    def batch(minutes: Range) = Converters.pointsToDf(spark, minutes.map(i =>
+      MetricPoint(t0 + i * 60L * 1000000000L, "cpu_usage", i.toDouble, Map("host" -> "s1"))))
+    writer.write(batch(0 until 10))
+    writer.write(batch(30 until 35))
+    val v = cat.state.version
+    new graft.compact.Compactor(spark, cat).compactGroup(cat.allChunks)
+    assert(cat.gc(System.currentTimeMillis() + 3600L * 1000L).size == 2,
+      "test premise: GC deleted v's chunks")
+    val eng = new QueryEngine(spark, cat)
+    val q = s"SELECT count(*) AS c FROM metrics " +
+      s"WHERE timestamp_ns >= $t0 AND timestamp_ns < ${t0 + hourNs}"
+    val e = intercept[Exception](eng.sqlAt(v, q).collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[java.io.FileNotFoundException]), e)
+    assert(eng.sql(q).collect()(0).getLong(0) == 15L)
+  }
+
+  test("a persisted L1 result over chunks compaction replaced leaves the cache " +
+    "on the next live query") {
+    val cat = new ChunkCatalog(Files.createTempDirectory("graft_eng_drop_"), cacheTtlMs = 0L)
+    val writer = new ChunkWriter(cat)
+    def batch(minutes: Range) = Converters.pointsToDf(spark, minutes.map(i =>
+      MetricPoint(t0 + i * 60L * 1000000000L, "cpu_usage", i.toDouble, Map("host" -> "s1"))))
+    writer.write(batch(0 until 10))
+    writer.write(batch(30 until 35))
+    val eng = new QueryEngine(spark, cat)
+    val q = s"SELECT count(*) AS c FROM metrics " +
+      s"WHERE timestamp_ns >= $t0 AND timestamp_ns < ${t0 + hourNs}"
+    val before = eng.sql(q)
+    assert(before.collect()(0).getLong(0) == 15L)
+    assert(before.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    new graft.compact.Compactor(spark, cat).compactGroup(cat.allChunks)
+    val after = eng.sql(q)
+    assert(after.collect()(0).getLong(0) == 15L)
+    assert(before.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+      "the result over the replaced chunks is still persisted")
+    assert(after.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    assert(eng.isResultCached(q))
+  }
+
+  test("a persisted L1 result stays cached after a query over another chunk set") {
+    val (eng, _) = freshEngine()
+    def count(h: Int) = s"SELECT COUNT(*) AS c FROM metrics " +
+      s"WHERE timestamp_ns >= ${t0 + h * hourNs} AND timestamp_ns < ${t0 + (h + 1) * hourNs}"
+    val first = eng.sql(count(0))
+    assert(first.collect()(0).getLong(0) == 24L)
+    assert(first.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    assert(eng.sql(count(2)).collect()(0).getLong(0) == 24L)
+    assert(eng.isResultCached(count(0)))
+    assert(first.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+      "planning another chunk set dropped the cached blocks of an L1 entry")
+  }
+
+  test("bindMetrics: subqueries and mixed case bind; a CTE named metrics shadows") {
+    val rel = org.apache.spark.sql.GraftBridge.fileIndexRelation(spark,
+      graft.plans.ZoneMapFileIndex(spark, Files.createTempDirectory("graft_bind_"), Nil),
+      graft.schema.MetricSchema.default)
+    def bound(sql: String) = QueryEngine.bindMetrics(spark.sessionState.sqlParser.parsePlan(sql), rel)
+    def relations(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Int =
+      p.collectWithSubqueries {
+        case r: org.apache.spark.sql.execution.datasources.LogicalRelation => r
+      }.size
+    def unresolved(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Seq[String] =
+      p.collectWithSubqueries {
+        case u: org.apache.spark.sql.catalyst.analysis.UnresolvedRelation => u.name
+      }
+    val sub = bound("SELECT * FROM METRICS WHERE value_f64 > " +
+      "(SELECT avg(value_f64) FROM Metrics) AND EXISTS (SELECT 1 FROM metrics)")
+    assert(relations(sub) == 3 && unresolved(sub).isEmpty)
+    // the self-join's two references get distinct attribute ids
+    val join = bound("SELECT * FROM metrics a JOIN metrics b ON a.host = b.host")
+    val ids = join.collect {
+      case r: org.apache.spark.sql.execution.datasources.LogicalRelation => r.output.map(_.exprId)
+    }
+    assert(ids.size == 2 && ids(0).intersect(ids(1)).isEmpty)
+    // the CTE definition reads the table; the body reads the CTE
+    val cte = bound("WITH metrics AS (SELECT * FROM metrics WHERE host = 'a') " +
+      "SELECT count(*) FROM metrics")
+    val defs = cte.asInstanceOf[org.apache.spark.sql.catalyst.plans.logical.UnresolvedWith].cteRelations
+    assert(relations(defs.head._2) == 1 && unresolved(cte) == Seq("metrics"))
+    // other tables and multi-part names are left to the session catalog
+    assert(unresolved(bound("SELECT * FROM other_view JOIN db.metrics")) ==
+      Seq("other_view", "db.metrics"))
+  }
+
+  /** Spark jobs submitted from this thread while `thunk` runs — tagged by job
+    * group, counted once a marker job shows the listener bus has drained.
+    */
+  private def jobsSubmittedBy(thunk: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"graft-jobs-${java.util.UUID.randomUUID()}"
+    val marker = group + "-marker"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => jobs.incrementAndGet()
+          case `marker` => drained.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try thunk finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      jobs.get
+    } finally sc.removeSparkListener(listener)
   }
 }

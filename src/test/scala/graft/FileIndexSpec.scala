@@ -67,8 +67,7 @@ class FileIndexSpec extends AnyFunSuite {
     // FileSourceStrategy actually hands a FileIndex)
     import org.apache.spark.sql.catalyst.dsl.expressions._
     import org.apache.spark.sql.catalyst.expressions.{EqualTo, Literal}
-    val idx = new ZoneMapFileIndex(spark, cat,
-      ChunkCatalog.mergedSchema(cat.allChunks).get)
+    val idx = ZoneMapFileIndex(spark, cat.root, cat.allChunks)
     idx.listFiles(Nil, Seq(EqualTo(Symbol("host").string, Literal("server2"))))
     assert(idx.lastSelectedPaths.size == 1)
   }
@@ -90,8 +89,8 @@ class FileIndexSpec extends AnyFunSuite {
 
   test("sizeInBytes feeds the optimizer; refresh clears caches") {
     val cat = warehouse()
-    val schema = ChunkCatalog.mergedSchema(cat.allChunks).get
-    val idx = new ZoneMapFileIndex(spark, cat, schema)
+    val idx = ZoneMapFileIndex(spark, cat.root, cat.allChunks)
+    assert(idx.dataSchema == ChunkCatalog.mergedSchema(cat.allChunks).get)
     assert(idx.sizeInBytes == cat.allChunks.map(_.sizeBytes).sum)
     assert(idx.inputFiles.nonEmpty)
     idx.refresh() // must not throw; clears file listings

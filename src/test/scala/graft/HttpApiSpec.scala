@@ -70,6 +70,31 @@ class HttpApiSpec extends AnyFunSuite {
     assert((j \ "stats" \ "rows_read") == JInt(2))
   }
 
+  test("POST /api/v1/sql binds `metrics` per query: a CTE of that name shadows, " +
+    "qualified columns resolve, other temp views are not rebound") {
+    def rows(q: String): List[org.json4s.JValue] = {
+      val resp = post("/api/v1/sql", s"""{"query":"${q.replace("\"", "\\\"")}"}""")
+      assert(resp.statusCode() == 200, resp.body())
+      (org.json4s.jackson.JsonMethods.parse(resp.body()) \ "data")
+        .asInstanceOf[org.json4s.JArray].arr
+    }
+    import org.json4s._
+    // the CTE body reads the warehouse; the outer query reads the CTE
+    assert(rows(s"WITH metrics AS (SELECT * FROM metrics " +
+      s"WHERE timestamp_ns >= $t0 AND host = 'server1') SELECT count(*) AS c FROM metrics") ==
+      List(JArray(List(JInt(24)))))
+    assert(rows(s"SELECT count(metrics.value_f64) AS c FROM metrics " +
+      s"WHERE metrics.timestamp_ns >= $t0 AND metrics.host = 'server2'") ==
+      List(JArray(List(JInt(24)))))
+    import spark.implicits._
+    Seq((t0, "side_metric", 1.0)).toDF("timestamp_ns", "metric_name", "value_f64")
+      .createOrReplaceTempView("http_side_view")
+    try assert(rows(s"SELECT metric_name, count(*) AS c FROM http_side_view " +
+      s"WHERE timestamp_ns >= $t0 GROUP BY metric_name") ==
+      List(JArray(List(JString("side_metric"), JInt(1)))))
+    finally spark.catalog.dropTempView("http_side_view")
+  }
+
   test("GET /api/v1/sql: csv format, bad format is a 400") {
     val q = java.net.URLEncoder.encode(
       s"SELECT metric_name, COUNT(*) AS cnt FROM metrics WHERE timestamp_ns >= $t0 " +
